@@ -16,7 +16,8 @@ registry, and a released local checkpoint is permanently dead
 (lineage severed) — so a foreachBatch sink running on a
 stream-execution thread must NOT call it, or it kills the caches of
 any concurrently running query/stream mid-flight.  Such callers wrap
-their work in ``with cacheutil.scope():`` instead: track/
+their work in ``with cacheutil.scope():`` instead (streaming/core.py
+does this for every foreachBatch micro-batch): track/
 local_checkpoint calls made on that thread register into the scope,
 and scope exit releases exactly those frames.  The active scope is
 thread-local, so two streams' micro-batches cannot see (or release)
@@ -78,20 +79,6 @@ class scope:
     def __exit__(self, *exc) -> None:
         _local.stack.pop()
         _release(self._scope, blocking=False)
-
-
-def scoped(fn):
-    """Decorator form of :class:`scope` for foreachBatch sinks: every
-    frame the sink tracks/checkpoints is released when the batch
-    returns (its lake writes have materialized by then)."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        with scope():
-            return fn(*args, **kwargs)
-
-    return wrapper
 
 
 def track(df: DataFrame) -> DataFrame:

@@ -67,6 +67,24 @@ def pad_short_lines(lines: DataFrame, n_fields: int) -> DataFrame:
     return lines.select(F.concat(F.col("value"), pad).alias("value"))
 
 
+def restore_empty_strings(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """Project ``df`` onto ``schema`` with every NULL string back to ''.
+
+    Missing CSV fields are '' — never NULL — the reference's
+    missing-value sentinel (P4, SURVEY §7 trap 2). Short rows are
+    null-filled by PERMISSIVE mode (pad-flow-data.sh:19 semantics), so
+    without this batch and stream tables diverge on every blank
+    utm/migration field. Shared by the batch and the streaming reads."""
+    return df.select(
+        *[
+            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
+            if f.dataType.typeName() == "string"
+            else F.col(f.name)
+            for f in schema.fields
+        ]
+    )
+
+
 def read_day_csv(
     spark: SparkSession,
     path: str,
@@ -108,17 +126,7 @@ def read_day_csv(
         raise ValueError(
             f"CSV load of {path}: {bad} corrupt rows exceeds MAXERROR={max_errors}"
         )
-    good = df.filter(F.col(_CORRUPT).isNull()).drop(_CORRUPT)
-    # pad-flow-data.sh:19 semantics: short rows were null-filled by
-    # PERMISSIVE mode; restore the empty-string sentinel.
-    good = good.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in schema.fields
-        ]
-    )
+    good = restore_empty_strings(df.filter(F.col(_CORRUPT).isNull()), schema)
     if max_lengths:
         good = truncate_columns(good, max_lengths)
     return good

@@ -22,9 +22,7 @@ from pyspark.sql import functions as F
 from fxa_activity_metrics_spark.functions.core import day_of, sample_cohort, ts_from_epoch
 from fxa_activity_metrics_spark.schemas import ACTIVITY, Dataset, SAMPLE_RATES
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-
-_FILE_DAY_RE = r"([0-9]{4}-[0-9]{2}-[0-9]{2})\.csv$"
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 
 def read_dataset_stream(
@@ -32,33 +30,11 @@ def read_dataset_stream(
 ) -> DataFrame:
     """Typed event stream: declared schema (never inferred), epoch
     → timestamp, event day, and the owning file's day."""
-    raw = (
-        spark.readStream.schema(dataset.csv_schema)
-        .option("maxFilesPerTrigger", 1)
-        # only this dataset's day-files — drop dirs hold several
-        # datasets (the batch driver filters by prefix the same way)
-        .option("pathGlobFilter", f"{dataset.csv_prefix}-*.csv")
-        # '' stays '' — the reference's missing-value sentinel (same
-        # options as the batch read_day_csv; SURVEY §7 trap 2)
-        .option("emptyValue", "")
-        .csv(source_dir)
+    raw = read_day_drops(
+        spark, source_dir, dataset.csv_schema, dataset.csv_prefix, day_col="_file_day"
     )
-    # residual NULLs (absent trailing fields) back to the sentinel
-    raw = raw.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in dataset.csv_schema.fields
-        ]
-    )
-    return (
-        raw.withColumn("timestamp", ts_from_epoch("timestamp"))
-        .withColumn("day", day_of("timestamp"))
-        .withColumn(
-            "_file_day",
-            F.regexp_extract(F.input_file_name(), _FILE_DAY_RE, 1).cast("date"),
-        )
+    return raw.withColumn("timestamp", ts_from_epoch("timestamp")).withColumn(
+        "day", day_of("timestamp")
     )
 
 
@@ -70,32 +46,18 @@ def run_dataset_import_stream(
     dataset: Dataset = ACTIVITY,
 ):
     """source stream → straggler filter → 3 sampled day-partition
-    sinks. Returns the started query (availableNow)."""
+    sinks. Returns the started query."""
     events = read_dataset_stream(spark, source_dir, dataset)
     perm_cols = [f.name for f in dataset.lake_schema.fields if f.name != "day"]
 
-    @cacheutil.scoped
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def sink(batch_df: DataFrame) -> None:
         # reference straggler filter: keep rows whose UTC day == the
         # day encoded in the source filename (import_events.py:118)
         day_rows = batch_df.filter(F.col("day") == F.col("_file_day"))
-        if day_rows.isEmpty():
-            return
         for suffix, percent, _months in SAMPLE_RATES:
             typed = day_rows.filter(sample_cohort(dataset.id_column, percent)).select(
                 *perm_cols, "day"
             )
             lake.write_days(f"{dataset.name}{suffix}", typed)
 
-    return (
-        events.writeStream.option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# backwards-compatible aliases for the activity-specific names
-read_activity_stream = read_dataset_stream
-run_activity_import_stream = run_dataset_import_stream
+    return day_drop_stream(events, checkpoint_dir, sink, checkpoint=True)

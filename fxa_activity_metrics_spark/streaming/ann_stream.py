@@ -44,10 +44,7 @@ from fxa_activity_metrics_spark.operators.similarity import (
     ivfpq_upsert_index,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 EMB_SCHEMA = T.StructType(
     [
@@ -70,12 +67,9 @@ def run_ann_index_stream(
 ):
     """Stream embedding day-drops (`embeddings-YYYY-MM-DD.json`) into
     the persisted IVFPQ index. Returns the started query."""
-    vecs = _docs_with_file_day(spark, source_dir, schema)
+    vecs = read_day_drops(spark, source_dir, schema)
 
-    def write_index(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_index(batch_df: DataFrame) -> None:
         delta = batch_df.select("vec_id", "embedding")
         if lake.exists(f"{name}_centroids"):
             ivfpq_upsert_index(lake, delta, name=name)
@@ -84,10 +78,4 @@ def run_ann_index_stream(
                 lake, delta, name=name, n_cells=n_cells, m=m, n_codes=n_codes
             )
 
-    return (
-        vecs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_index)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(vecs, checkpoint_dir, write_index)

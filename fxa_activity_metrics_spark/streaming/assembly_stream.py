@@ -30,11 +30,8 @@ from fxa_activity_metrics_spark.operators.assembly import (
     split_col,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.dedup_stream import DOCS_SCHEMA
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 
 def training_chunks_batch(
@@ -73,12 +70,9 @@ def run_training_chunks_stream(
     """Stream document day-drops → quality-gated, split-tagged
     training chunks in a day-partitioned table. Returns the started
     query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    def write_chunks(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_chunks(batch_df: DataFrame) -> None:
         out = training_chunks_batch(
             batch_df,
             chunk_size=chunk_size,
@@ -87,10 +81,4 @@ def run_training_chunks_stream(
         )
         lake.write_days(table, out, sort_cols=["doc_id", "chunk_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_chunks)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_chunks)

@@ -37,12 +37,8 @@ from fxa_activity_metrics_spark.operators.textstats import (
     text_stats,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.dedup_stream import DOCS_SCHEMA
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 CURATED_SCHEMA = T.StructType(
     [
@@ -68,14 +64,9 @@ def run_curation_stream(
     per-doc quality gate + content hash from the increment only and
     writes through the replace-the-day sink, so replays and
     re-imports converge. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    @cacheutil.scoped
-    def write_curated(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_curated(batch_df: DataFrame) -> None:
         survivors = (
             text_stats(
                 batch_df,
@@ -90,13 +81,7 @@ def run_curation_stream(
         )
         lake.write_days(table, survivors, sort_cols=["doc_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_curated)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_curated, checkpoint=True)
 
 
 def manifest_from_lake(

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 DOCS_SCHEMA = T.StructType(
     [
@@ -36,58 +36,6 @@ DOCS_SCHEMA = T.StructType(
         T.StructField("text", T.StringType()),
     ]
 )
-
-
-def read_docs_stream(
-    spark: SparkSession, source_dir: str, schema: T.StructType = DOCS_SCHEMA
-) -> DataFrame:
-    """File-source stream of document day-drops (declared schema,
-    one file per trigger — the day-batch cadence)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
-    )
-
-
-_FILE_DAY_RE = r"([0-9]{4}-[0-9]{2}-[0-9]{2})\.json$"
-
-
-def _docs_with_file_day(
-    spark: SparkSession, source_dir: str, schema: T.StructType
-) -> DataFrame:
-    """Document stream + the day parsed from each source file name,
-    carrying the file name for diagnostics."""
-    return (
-        read_docs_stream(spark, source_dir, schema)
-        .withColumn("_src_file", F.input_file_name())
-        .withColumn(
-            "day",
-            # try_cast: an unparseable name yields NULL here (ANSI cast
-            # would throw an opaque CAST_INVALID_INPUT mid-plan) and
-            # _require_file_days raises the actionable error instead
-            F.regexp_extract(F.col("_src_file"), _FILE_DAY_RE, 1).try_cast("date"),
-        )
-    )
-
-
-def _require_file_days(batch_df: DataFrame) -> None:
-    """Fail fast on files not named `*-YYYY-MM-DD.json`: a null day
-    would land those rows in the default partition, silently outside
-    every read_days / incremental_candidates window."""
-    bad = [
-        r["_src_file"]
-        for r in batch_df.filter(F.col("day").isNull())
-        .select("_src_file")
-        .distinct()
-        .limit(5)
-        .collect()
-    ]
-    if bad:
-        raise ValueError(
-            "document day-files must be named '<prefix>-YYYY-MM-DD.json'; "
-            f"cannot parse a day from: {bad}"
-        )
 
 
 def dedup_aggregate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -102,28 +50,6 @@ def dedup_aggregate(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
-
-
-def merge_keepers_sink(lake: Lake, table: str = "dedup_keepers"):
-    """foreachBatch upsert by content_hash — replace changed hashes,
-    keep the rest (idempotent per epoch)."""
-
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # sever micro-batch lineage before joining against the sink
-        # table (see flows_stream.merge_sessions_sink)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if lake.exists(table):
-            existing = lake.read(table)
-            kept = existing.join(
-                batch_df.select("content_hash"), "content_hash", "left_anti"
-            )
-            merged = kept.unionByName(batch_df)
-        else:
-            merged = batch_df
-        lake.overwrite(table, merged)
-
-    return write
 
 
 def run_signature_import_stream(
@@ -146,28 +72,18 @@ def run_signature_import_stream(
     tests/test_streaming_dedup.py). Returns the started query."""
     from fxa_activity_metrics_spark.operators.dedup import minhash_signature
 
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
     # signing happens INSIDE the batch writer via the shared batch
     # operator, so stream and batch produce byte-identical signature
     # rows and the sink is the batch day sink (idempotent per day)
-    @cacheutil.scoped
-    def write_signed(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_signed(batch_df: DataFrame) -> None:
         out = minhash_signature(
             batch_df, "doc_id", "text", num_hashes, shingle_n
         ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
         lake.write_days(table, out, sort_cols=["id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_signed)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_signed)
 
 
 def run_incremental_dedup_stream(
@@ -201,13 +117,9 @@ def run_incremental_dedup_stream(
         incremental_candidates,
     )
 
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write(batch_df: DataFrame) -> None:
         sigs = minhash_signature(
             batch_df, "doc_id", "text", num_hashes, shingle_n
         ).join(batch_df.select(F.col("doc_id").alias("id"), "day"), "id")
@@ -223,13 +135,7 @@ def run_incremental_dedup_stream(
                 sort_cols=["id_a", "id_b"],
             )
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write)
 
 
 def run_exact_dedup_stream(
@@ -238,17 +144,24 @@ def run_exact_dedup_stream(
     lake: Lake,
     checkpoint_dir: str,
     table: str = "dedup_keepers",
-    available_now: bool = True,
 ):
     """Wire source → running dedup agg → merge sink; returns the
     query. In update output mode each micro-batch emits only the
-    hashes it touched."""
-    agg = dedup_aggregate(read_docs_stream(spark, source_dir))
-    writer = (
-        agg.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_keepers_sink(lake, table))
+    hashes it touched; the sink upserts them by content_hash —
+    replace changed hashes, keep the rest (idempotent per epoch)."""
+    agg = dedup_aggregate(read_day_drops(spark, source_dir, DOCS_SCHEMA))
+
+    def merge(batch_df: DataFrame) -> None:
+        if lake.exists(table):
+            existing = lake.read(table)
+            kept = existing.join(
+                batch_df.select("content_hash"), "content_hash", "left_anti"
+            )
+            merged = kept.unionByName(batch_df)
+        else:
+            merged = batch_df
+        lake.overwrite(table, merged)
+
+    return day_drop_stream(
+        agg, checkpoint_dir, merge, output_mode="update", checkpoint=True
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

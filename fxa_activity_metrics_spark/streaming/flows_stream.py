@@ -5,8 +5,8 @@ by S3 listing (import_events.py:179-186) and a 1-day late-data grace
 (enrichments read day AND day+1, import_flow_events.py:170-171). The
 Structured Streaming mapping (SURVEY §2.9):
 
-- file source over the drop directory, `trigger(availableNow=True)`
-  for the scheduled-batch cadence or processingTime for continuous;
+- file source over the drop directory, drained once per scheduled
+  run (streaming/core.py);
 - `withWatermark("timestamp", "1 day")` — the same 1-day lateness
   contract, now enforced by the engine;
 - session state per flow_id as a streaming aggregation in update
@@ -31,44 +31,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fxa_activity_metrics_spark.functions.core import (
-    day_of,
-    parse_continued_from,
-    ts_from_epoch,
-)
-from fxa_activity_metrics_spark.schemas import (
-    FLOW_CSV_SCHEMA,
-    FLOW_METADATA_SCHEMA,
-)
+from fxa_activity_metrics_spark.functions.core import parse_continued_from
+from fxa_activity_metrics_spark.schemas import FLOW, FLOW_METADATA_SCHEMA
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-
-
-def read_flow_stream(spark: SparkSession, source_dir: str) -> DataFrame:
-    """File-source stream of flow CSV drops (headerless, declared
-    schema — never inferred). Applies the SAME empty-string boundary
-    as the batch loader (sources/csv.py read_day_csv): missing CSV
-    fields are '' — never NULL — the reference's missing-value
-    sentinel (P4, SURVEY §7 trap 2). Without the coalesce the stream
-    and batch session tables diverge on every blank utm/migration
-    field (caught by test_stream_full_chain_matches_batch_pipeline)."""
-    raw = (
-        spark.readStream.schema(FLOW_CSV_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("emptyValue", "")
-        .csv(source_dir)
-    )
-    raw = raw.select(
-        *[
-            F.coalesce(F.col(f.name), F.lit("")).alias(f.name)
-            if f.dataType.typeName() == "string"
-            else F.col(f.name)
-            for f in FLOW_CSV_SCHEMA.fields
-        ]
-    )
-    return raw.withColumn("timestamp", ts_from_epoch("timestamp")).withColumn(
-        "day", day_of("timestamp")
-    )
+from fxa_activity_metrics_spark.streaming.activity_stream import read_dataset_stream
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream
 
 
 def session_aggregate(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -124,10 +91,18 @@ def session_aggregate(events: DataFrame, watermark: str = "1 day") -> DataFrame:
     return out.select([f.name for f in FLOW_METADATA_SCHEMA.fields])
 
 
-def merge_sessions_sink(lake: Lake, table: str = "flow_metadata_stream"):
-    """foreachBatch upsert: replace changed flow_ids, keep the rest.
-    Idempotent per micro-batch — replaying an epoch converges to the
-    same table state (exactly-once effect on the lake).
+def run_flow_sessions_stream(
+    spark: SparkSession,
+    source_dir: str,
+    lake: Lake,
+    checkpoint_dir: str,
+    table: str = "flow_metadata_stream",
+):
+    """Wire source → session agg → merge sink; returns the query.
+
+    The sink is a foreachBatch upsert: replace changed flow_ids, keep
+    the rest. Idempotent per micro-batch — replaying an epoch converges
+    to the same table state (exactly-once effect on the lake).
 
     The sink table is export_date-PARTITIONED and the merge is
     partition-granular (Lake.merge_replace): only the partitions
@@ -136,16 +111,9 @@ def merge_sessions_sink(lake: Lake, table: str = "flow_metadata_stream"):
     plans/incremental.py (flow_after_day). A minutes-level trigger
     therefore costs O(touched partitions) per micro-batch, never a
     full-table rewrite."""
+    sessions = session_aggregate(read_dataset_stream(spark, source_dir, FLOW))
 
-    @cacheutil.scoped
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # localCheckpoint severs the micro-batch lineage: joining a
-        # streaming-derived frame against a batch read of the sink
-        # table otherwise trips attribute resolution (and would
-        # recompute the micro-batch per downstream action)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    def merge(batch_df: DataFrame) -> None:
         lake.merge_replace(
             table,
             batch_df,
@@ -155,28 +123,9 @@ def merge_sessions_sink(lake: Lake, table: str = "flow_metadata_stream"):
             sort_cols=["begin_time"],
         )
 
-    return write
-
-
-def run_flow_sessions_stream(
-    spark: SparkSession,
-    source_dir: str,
-    lake: Lake,
-    checkpoint_dir: str,
-    table: str = "flow_metadata_stream",
-    available_now: bool = True,
-):
-    """Wire source → session agg → merge sink; returns the query."""
-    events = read_flow_stream(spark, source_dir)
-    sessions = session_aggregate(events)
-    writer = (
-        sessions.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(merge_sessions_sink(lake, table))
+    return day_drop_stream(
+        sessions, checkpoint_dir, merge, output_mode="update", checkpoint=True
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 SESSION_STATS_SCHEMA = (
@@ -270,14 +219,10 @@ def run_session_stats_stream(
     (new events after its state timed out) replaces its prior row,
     and only the touched day partitions are rewritten — untouched
     partitions keep their exact files."""
-    events = read_flow_stream(spark, source_dir)
+    events = read_dataset_stream(spark, source_dir, FLOW)
     stats = stateful_session_stats(events, timeout_ms=timeout_ms, watermark=watermark)
 
-    @cacheutil.scoped
-    def append(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    def append(batch_df: DataFrame) -> None:
         lake.merge_replace(
             table,
             batch_df.withColumn("day", F.col("first_ts").cast("date")),
@@ -285,13 +230,7 @@ def run_session_stats_stream(
             "flow_id",
         )
 
-    return (
-        stats.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(append)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(stats, checkpoint_dir, append, checkpoint=True)
 
 
 def daily_event_counts_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
@@ -319,14 +258,9 @@ def run_daily_counts_stream(
     version of the reference's clear-day+insert contract
     (import_events.py:102-105). Replaying an epoch converges to the
     same partition contents."""
-    events = read_flow_stream(spark, source_dir)
-    counts = daily_event_counts_stream(events)
+    counts = daily_event_counts_stream(read_dataset_stream(spark, source_dir, FLOW))
 
-    @cacheutil.scoped
-    def upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
-        if batch_df.isEmpty():
-            return
+    def upsert(batch_df: DataFrame) -> None:
         days = [r["day"] for r in batch_df.select("day").distinct().collect()]
         if lake.exists(table):
             existing = lake.read_days(table, min(days), max(days))
@@ -338,10 +272,6 @@ def run_daily_counts_stream(
             merged = batch_df
         lake.write_days(table, merged, sort_cols=["type"])
 
-    return (
-        counts.writeStream.outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
-        .trigger(availableNow=True)
-        .start()
+    return day_drop_stream(
+        counts, checkpoint_dir, upsert, output_mode="update", checkpoint=True
     )

@@ -28,12 +28,12 @@ never a full-history rewrite of untouched keys' interval math.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from fxa_activity_metrics_spark import cacheutil
 from fxa_activity_metrics_spark.operators.summaries import scd2_apply_increment
 from fxa_activity_metrics_spark.sources.lake import Lake
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 SCD2_TABLE = "scd2_history"
 
@@ -68,31 +68,14 @@ def run_scd2_stream(
 ):
     """Maintain the SCD2 dimension table from a stream of
     ``events-YYYY-MM-DD.json`` day-drops. Returns the started query
-    (availableNow trigger — drain-and-stop, the repo's batch-parity
-    harness shape)."""
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(source_dir)
-    )
+    (drain-and-stop, the repo's batch-parity harness shape)."""
+    events = read_day_drops(spark, source_dir, schema)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # Scoped release: this runs on a stream-execution thread, so
-        # only THIS batch's frames may be released (ADVICE r9 item 1).
-        with cacheutil.scope():
-            if batch_df.isEmpty():
-                return
-            batch_df = batch_df.transform(cacheutil.local_checkpoint)
-            stored = lake.read(table, SCD2_SCHEMA)
-            out = scd2_apply_increment(stored, batch_df).transform(
-                cacheutil.local_checkpoint
-            )
-            lake.overwrite(table, out)
+    def write(batch_df: DataFrame) -> None:
+        stored = lake.read(table, SCD2_SCHEMA)
+        out = scd2_apply_increment(stored, batch_df).transform(
+            cacheutil.local_checkpoint
+        )
+        lake.overwrite(table, out)
 
-    return (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(events, checkpoint_dir, write, checkpoint=True)

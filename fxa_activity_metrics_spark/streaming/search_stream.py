@@ -27,11 +27,8 @@ from fxa_activity_metrics_spark.operators.search import (
     upsert_text_index,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.dedup_stream import DOCS_SCHEMA
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 
 def run_text_index_stream(
@@ -45,22 +42,13 @@ def run_text_index_stream(
 ):
     """Stream document day-drops into the persisted inverted index.
     Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    def write_index(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_index(batch_df: DataFrame) -> None:
         delta = batch_df.select("doc_id", "text")
         if lake.exists(f"{name}_stats"):
             upsert_text_index(lake, delta, name=name)
         else:
             build_text_index(lake, delta, name=name, n_buckets=n_buckets)
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_index)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_index)

@@ -48,12 +48,8 @@ from fxa_activity_metrics_spark.operators.rollup import (
     _mg_fold,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark import cacheutil
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.dedup_stream import DOCS_SCHEMA
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 CMS_DAY_SCHEMA = T.StructType(
     [
@@ -146,25 +142,14 @@ def run_token_sketch_stream(
     `documents-YYYY-MM-DD.json` day-drops. Each batch's sketches are
     computed from the increment only and written through the
     idempotent day sink. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    @cacheutil.scoped
-    def write_sketches(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_sketches(batch_df: DataFrame) -> None:
         cms, mg = day_token_sketches(batch_df)
         lake.write_days(cms_table, cms, sort_cols=["j", "bucket"])
         lake.write_days(mg_table, mg, sort_cols=["item"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_sketches)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_sketches, checkpoint=True)
 
 
 def cms_from_lake(lake: Lake, cms_table: str = "token_cms") -> DataFrame:
@@ -241,23 +226,12 @@ def run_vocab_kmv_stream(
     `documents-YYYY-MM-DD.json` day-drops through the idempotent day
     sink: re-dropped days replace their own sketch row, replays
     converge."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    @cacheutil.scoped
-    def write_kmv(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
-        batch_df = batch_df.transform(cacheutil.local_checkpoint)
+    def write_kmv(batch_df: DataFrame) -> None:
         lake.write_days(kmv_table, day_vocab_kmv(batch_df, k=k), sort_cols=[])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_kmv)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_kmv, checkpoint=True)
 
 
 def vocab_uniques_from_lake(

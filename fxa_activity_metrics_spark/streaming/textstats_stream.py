@@ -26,11 +26,8 @@ from fxa_activity_metrics_spark.operators.textstats import (
     text_stats,
 )
 from fxa_activity_metrics_spark.sources.lake import Lake
-from fxa_activity_metrics_spark.streaming.dedup_stream import (
-    DOCS_SCHEMA,
-    _docs_with_file_day,
-    _require_file_days,
-)
+from fxa_activity_metrics_spark.streaming.dedup_stream import DOCS_SCHEMA
+from fxa_activity_metrics_spark.streaming.core import day_drop_stream, read_day_drops
 
 
 def run_text_stats_stream(
@@ -43,12 +40,9 @@ def run_text_stats_stream(
 ):
     """Stream document day-drops → per-doc quality + PII stats into a
     day-partitioned table. Returns the started query."""
-    docs = _docs_with_file_day(spark, source_dir, schema)
+    docs = read_day_drops(spark, source_dir, schema)
 
-    def write_stats(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _require_file_days(batch_df)
+    def write_stats(batch_df: DataFrame) -> None:
         # ONE projection: quality stats, PII counts, and the day are
         # all per-row expressions — no joins, so a dirty drop with a
         # duplicated doc_id stays two rows (as in batch) instead of
@@ -58,10 +52,4 @@ def run_text_stats_stream(
         )
         lake.write_days(table, out, sort_cols=["doc_id"])
 
-    return (
-        docs.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_stats)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return day_drop_stream(docs, checkpoint_dir, write_stats)

@@ -158,9 +158,10 @@ def test_stream_session_sink_is_partition_granular(spark, tmp_path):
 
 def test_daily_counts_stream_plan_and_semantics(spark, src_dir, tmp_path):
     """Tumbling 1-day window == static to_date groupBy."""
-    from fxa_activity_metrics_spark.streaming.flows_stream import read_flow_stream
+    from fxa_activity_metrics_spark.schemas import FLOW
+    from fxa_activity_metrics_spark.streaming.activity_stream import read_dataset_stream
 
-    events = read_flow_stream(spark, src_dir)
+    events = read_dataset_stream(spark, src_dir, FLOW)
     counted = daily_event_counts_stream(events)
     q = (
         counted.writeStream.outputMode("complete")
@@ -260,7 +261,7 @@ def test_activity_import_stream_matches_batch(spark, tmp_path):
     from fxa_activity_metrics_spark.plans.incremental import ImportJob
     from fxa_activity_metrics_spark.schemas import ACTIVITY, SAMPLE_RATES
     from fxa_activity_metrics_spark.streaming.activity_stream import (
-        run_activity_import_stream,
+        run_dataset_import_stream,
     )
     from tests.fixtures import write_activity_days
 
@@ -269,7 +270,7 @@ def test_activity_import_stream_matches_batch(spark, tmp_path):
     write_activity_days(src, days)
 
     stream_lake = Lake(spark, str(tmp_path / "stream_lake"))
-    q = run_activity_import_stream(
+    q = run_dataset_import_stream(
         spark, src, stream_lake, checkpoint_dir=str(tmp_path / "ckpt_act")
     )
     q.awaitTermination(120)
@@ -287,7 +288,7 @@ def test_activity_import_stream_matches_batch(spark, tmp_path):
         assert rows(stream_lake, t) == rows(batch_lake, t), t
 
     before = rows(stream_lake, "activity_events")
-    q2 = run_activity_import_stream(
+    q2 = run_dataset_import_stream(
         spark, src, stream_lake, checkpoint_dir=str(tmp_path / "ckpt_act")
     )
     q2.awaitTermination(120)
@@ -330,6 +331,40 @@ def test_dataset_import_stream_email_mixed_dir(spark, tmp_path):
     for t in ("email_events", "email_events_sampled_10", "email_events_sampled_50"):
         assert rows_of(stream_lake, t) == rows_of(batch_lake, t), t
     assert not stream_lake.exists("activity_events"), "glob filter keeps other datasets out"
+
+    # flow streams keep to flow_events-*.csv as well: the same flows
+    # dropped beside the activity and email files give the sessions
+    # (and event counts) of a flow-only directory
+    from fxa_activity_metrics_spark.streaming.flows_stream import run_daily_counts_stream
+
+    flow_only = str(tmp_path / "flow_only")
+    write_flow_days(flow_only, D1, D2)
+    write_flow_days(src, D1, D2)
+    for name, d in (("mixed", src), ("flow_only", flow_only)):
+        for run, table in ((run_flow_sessions_stream, "sessions"), (run_daily_counts_stream, "counts")):
+            q = run(spark, d, stream_lake, str(tmp_path / f"ck_{table}_{name}"), table=f"{table}_{name}")
+            q.awaitTermination(120)
+    for table in ("sessions", "counts"):
+        assert rows_of(stream_lake, f"{table}_mixed") == rows_of(stream_lake, f"{table}_flow_only"), table
+
+
+def test_dataset_import_stream_unparseable_drop_name_fails_loud(spark, tmp_path):
+    """A CSV drop whose name has no day kills the query with the same
+    actionable error as the document streams, not a cast error."""
+    from pyspark.errors import StreamingQueryException
+
+    from fxa_activity_metrics_spark.streaming.activity_stream import (
+        run_dataset_import_stream,
+    )
+    from tests.fixtures import write_activity_days
+
+    src = tmp_path / "src"
+    write_activity_days(str(src), [D1])
+    (src / f"activity_events-{D1}.csv").rename(src / "activity_events-latest.csv")
+    lake = Lake(spark, str(tmp_path / "lake"))
+    q = run_dataset_import_stream(spark, str(src), lake, str(tmp_path / "ck"))
+    with pytest.raises(StreamingQueryException, match="cannot parse a day"):
+        q.awaitTermination(120)
 
 
 def test_stream_full_chain_matches_batch_pipeline(spark, tmp_path):
